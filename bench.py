@@ -224,17 +224,16 @@ def bench_cc_skew(spark) -> dict:
 
 
 def bench_gazetteer_fallback(spark, docs_path: str) -> dict:
-    """Broadcast-automaton vs shuffle-join gazetteer on the SAME bench
-    corpus (VERDICT r03 #8 scale evidence): the fallback must stay in
-    the same cost class as the AC path it replaces when the dictionary
-    outgrows broadcast, and the hit counts must agree exactly."""
+    """Broadcast-automaton vs dictionary-shard gazetteer on the SAME
+    bench corpus (VERDICT r03 #8 scale evidence): the fallback must stay
+    in the same cost class as the AC path it replaces when the
+    dictionary outgrows broadcast, and the hit counts must agree
+    exactly."""
     from pyspark.sql import functions as F
 
     from pie_spark.extract.gazetteer import gazetteer_matches
-    from pie_spark.extract.gazetteer_join import gazetteer_join_matches
     from pie_spark.extract.gazetteer_shard import gazetteer_shard_matches
     from pie_spark.extract.spans import explode_spans, text_spans
-    from pie_spark.fixtures.gazetteer import hot_surfaces
     from pie_spark.fixtures.gen import entity_dict_df
     from pie_spark.schemas import DOC_SCHEMA
 
@@ -247,24 +246,16 @@ def bench_gazetteer_fallback(spark, docs_path: str) -> dict:
     n_ac = gazetteer_matches(txt, spark, surfaces).count()
     ac_wall = time.perf_counter() - t0
 
-    t0 = time.perf_counter()
-    n_join = gazetteer_join_matches(
-        txt, d, hot=hot_surfaces(), salt_k=8
-    ).count()
-    join_wall = time.perf_counter() - t0
-
-    # r06: the shard-automaton fallback (default dictionary-scale path)
+    # the pipeline's dictionary-scale fallback
     t0 = time.perf_counter()
     n_shard = gazetteer_shard_matches(txt, d, salt_parts=8).count()
     shard_wall = time.perf_counter() - t0
     return {
         "automaton_wall_sec": round(ac_wall, 3),
-        "join_wall_sec": round(join_wall, 3),
         "shard_wall_sec": round(shard_wall, 3),
         "hits_automaton": n_ac,
-        "hits_join": n_join,
         "hits_shard": n_shard,
-        "hits_equal": n_ac == n_join == n_shard,
+        "hits_equal": n_ac == n_shard,
     }
 
 

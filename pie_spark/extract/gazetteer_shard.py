@@ -1,11 +1,12 @@
-"""M6 at dictionary scale, path 2: dictionary-shard window probes
-(SURVEY.md §2.3 M6 fallback; VERDICT r05 next#1).
+"""M6 at dictionary scale: dictionary-shard window probes (SURVEY.md
+§2.3 M6 fallback; VERDICT r05 next#1) — the pipeline's gazetteer when
+the dictionary is too large to broadcast.
 
-The expression-join fallback (gazetteer_join.py) bottoms out at ~6× the
-broadcast automaton's wall at 1M docs — the residual cost is per-token
-candidate-expression work Catalyst cannot make cheaper (VERDICT r05
-what's-wrong#1: "the next lever is algorithmic"). This module changes
-the algorithm, in two Arrow stages:
+Equi-joining token-ngram candidates to the dictionary costs ~6× the
+broadcast automaton's wall at 1M docs — per-token candidate-expression
+work Catalyst cannot make cheaper (VERDICT r05 what's-wrong#1: "the
+next lever is algorithmic"). This module changes the algorithm, in two
+Arrow stages:
 
   1. **Candidate pass** (mapInPandas, ONE pass over the text, never
      replicated): a compiled-regex scan (C speed) finds every
@@ -24,9 +25,9 @@ the algorithm, in two Arrow stages:
      non-alnum flank. The dictionary never touches the driver and
      never broadcasts.
 
-Exactness (stronger than the join path): the hit set equals the
-broadcast automaton's EXACTLY, including non-token-aligned occurrences
-the join path's coverage contract excludes (``aa-Whitfield-bb``).
+Exactness: the hit set equals the broadcast automaton's EXACTLY,
+including non-token-aligned occurrences such as ``aa-Whitfield-bb``
+that a token-ngram matcher cannot see.
 Proof sketch, both directions:
   * automaton hit ⊆ shard hit: an AhoCorasick+_boundary_ok hit of
     surface ``p`` at position ``s`` requires ``s == 0`` or
@@ -60,18 +61,15 @@ Scale shape (what shuffles at 10^12 docs):
   * text: scanned once, in place, by the candidate pass — zero
     replication, zero shuffle of span text. Spans with no alphabet
     char at any boundary emit nothing (the distributed analogue of
-    the automaton's C-speed prefilter). The expression-join path
-    (gazetteer_join.py) is retained as the all-JVM alternative for
-    Arrow-hostile deployments; pipeline default is this one (faster
-    measured wall; see BENCH/BASELINE.md r06).
-  * the large-alphabet guard (gazetteer_join.FIRST_CHAR_PREFILTER_MAX,
-    shared): past 128 distinct first chars (CJK gazetteers) the shard
-    key becomes ``pmod(hash(first_char), HASH_BUCKETS)`` on the
-    dictionary side, computed JVM-side on the candidate's emitted
-    char too (no Python reimplementation of Murmur3), and the
-    candidate pass emits a window at EVERY boundary position with the
-    global maxlen — routing selectivity degrades gracefully while
-    shard count and per-group tries stay bounded.
+    the automaton's C-speed prefilter).
+  * the large-alphabet guard (FIRST_CHAR_PREFILTER_MAX): past 128
+    distinct first chars (CJK gazetteers) the shard key becomes
+    ``pmod(hash(first_char), HASH_BUCKETS)`` on the dictionary side,
+    computed JVM-side on the candidate's emitted char too (no Python
+    reimplementation of Murmur3), and the candidate pass emits a
+    window at EVERY boundary position with the global maxlen —
+    routing selectivity degrades gracefully while shard count and
+    per-group tries stay bounded.
 """
 
 from __future__ import annotations
@@ -79,9 +77,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pie_spark.extract.gazetteer_join import FIRST_CHAR_PREFILTER_MAX
 from pie_spark.schemas import MENTION_SCHEMA
 
+# past this many distinct dictionary first chars (e.g. a CJK-surname
+# gazetteer) per-char shards stop paying off: routing switches to
+# HASH_BUCKETS hash buckets and every boundary position emits a window
+FIRST_CHAR_PREFILTER_MAX = 128
 # shard count in the large-alphabet (hash-bucket) regime
 HASH_BUCKETS = 64
 

@@ -50,11 +50,10 @@ def media_spans(spans: DataFrame) -> DataFrame:
 def media_refs(docs: DataFrame) -> DataFrame:
     """(doc_id, media_ref) only — the exact input HAS_MEDIA triples need.
 
-    Uses plain ``explode`` (not ``posexplode``): Spark's nested schema
-    pruning handles Explode but NOT PosExplode, so this shape prunes the
-    parquet ReadSchema to ``spans.kind``/``spans.media_ref`` — the heavy
-    ``spans.text`` payload is never re-read on the media branch (r07;
-    verified in plans/r07). Row multiset equals
+    Uses plain ``explode`` (no span positions). The parquet ReadSchema
+    is NOT pruned: it still carries ``spans.text``
+    (plans/r07/media_branch_after.txt), so the media branch re-reads the
+    text payload and drops it after the scan. Row multiset equals
     ``media_spans(explode_spans(docs)).select("doc_id", "media_ref")``.
     """
     return (
