@@ -129,20 +129,3 @@ def regex_matches(text_spans: DataFrame, enable_phone: bool = True) -> DataFrame
         F.lit("regex").alias("detector"),
         F.col("m.score").alias("score"),
     )
-
-
-def email_matches_native(text_spans: DataFrame) -> DataFrame:
-    """M1 native fast path: EMAIL-only extraction with zero Python —
-    ``regexp_extract_all`` stays inside WholeStageCodegen. Used by the
-    oracle-checked query surface (offsets not needed there); the full
-    pipeline uses :func:`regex_matches` for offsets."""
-    return (
-        text_spans.select(
-            "doc_id",
-            "span_idx",
-            F.explode(
-                F.regexp_extract_all("text", F.lit(f"(^| )({EMAIL_RE})"), 2)
-            ).alias("surface"),
-        )
-        .withColumn("mention_type", F.lit("EMAIL"))
-    )

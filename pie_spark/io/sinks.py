@@ -4,7 +4,7 @@ BASELINE.json:14 "explicit bucketed partitioning on doc_id").
 Layout (Parquet-manifest fallback; Iceberg mapping in the docstring of
 pie_spark.io.snapshots):
 
-    <out>/triples/snap-<id>/pred=<P>/part-*.parquet
+    <out>/triples/snap-<token>/pred=<P>/part-*.parquet   (token: 8 hex chars)
 
 * ``repartition(buckets, doc_id)`` hash-buckets rows so all triples of
   one document land in one task/file — the Iceberg equivalent is

@@ -5,10 +5,13 @@ checkpoints").
 No Iceberg runtime jar exists in this sandbox (verified at survey
 time), so the engine ships a **TableFormat seam** with the semantics
 the spec needs — snapshot ids, atomic commits, snapshot-pinned scans,
-multi-dataset checkpoints — implemented as Parquet + a JSON manifest:
+multi-dataset checkpoints — implemented as Parquet + versioned JSON
+metadata:
 
-    <root>/_manifest.json                 ← commit pointer (atomic rename)
-    <root>/<dataset>/snap-<id>/*.parquet  ← immutable data files
+    <root>/_meta-<V>.json                    ← metadata version V (6 digits);
+                                               the highest V is current
+    <root>/<dataset>/snap-<token>/*.parquet  ← immutable data files
+                                               (token: 8 random hex chars)
 
 On a cluster with Iceberg available, ``SnapshotTable`` maps 1:1 onto
 the Iceberg API and can be swapped behind the same methods:
@@ -29,6 +32,9 @@ written exactly once. This is precisely Iceberg's optimistic-commit
 loop: writers race on the metadata-pointer swap, losers rebase and
 retry (Iceberg ``commit.retry.num-retries``); here the swap is the
 exclusive hard-link, there it is the catalog's atomic pointer CAS.
+Every snapshot-adding writer goes through the one loop in
+``SnapshotTable._publish``; ``expire_snapshots`` drops snapshots instead
+and keeps its own.
 A crash before the link leaves the previous snapshot current — data
 files of the dead snapshot are unreferenced garbage, never visible —
 the same reader-visible atomicity Iceberg's metadata swap gives.
@@ -45,6 +51,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -70,6 +77,11 @@ def _dirs(v: str | list[str]) -> list[str]:
     return v if isinstance(v, list) else [v]
 
 
+def _referenced(snapshots: list[dict]) -> set[str]:
+    """Every data dir the given snapshot records point at."""
+    return {p for s in snapshots for v in s["datasets"].values() for p in _dirs(v)}
+
+
 class CommitConflictError(RuntimeError):
     """Raised when a commit loses the metadata CAS more than
     ``max_retries`` times (Iceberg: CommitFailedException after
@@ -83,31 +95,35 @@ class SnapshotTable:
         os.makedirs(root, exist_ok=True)
 
     # -- versioned metadata -------------------------------------------------
-    @property
-    def _manifest_path(self) -> str:  # legacy (pre-r06) single-file layout
-        return os.path.join(self.root, "_manifest.json")
-
     def _meta_path(self, version: int) -> str:
         return os.path.join(self.root, f"_meta-{version:06d}.json")
 
-    def _latest_version(self) -> int:
-        """Highest committed metadata version; 0 = none (legacy or empty)."""
-        best = 0
+    def _load(self) -> tuple[int, dict]:
+        """The highest committed metadata version and its manifest, from
+        ONE directory listing. Version 0 = none: a pre-r06 table reads
+        its legacy ``_manifest.json``, an empty one reads as no
+        snapshots."""
+        v = 0
         for name in os.listdir(self.root):
             if name.startswith("_meta-") and name.endswith(".json"):
                 try:
-                    best = max(best, int(name[6:-5]))
+                    v = max(v, int(name[6:-5]))
                 except ValueError:
                     continue
-        return best
-
-    def _read_manifest(self) -> dict:
-        v = self._latest_version()
-        path = self._manifest_path if v == 0 else self._meta_path(v)
+        path = self._meta_path(v) if v else os.path.join(self.root, "_manifest.json")
         if not os.path.exists(path):
-            return {"current": None, "snapshots": []}
+            return v, {"current": None, "snapshots": []}
         with open(path) as f:
-            return json.load(f)
+            return v, json.load(f)
+
+    @staticmethod
+    def _current(m: dict) -> dict:
+        """The current snapshot record (``partitions`` defaulted for
+        tables older than r06), or an empty one."""
+        if m["current"] is None:
+            return {"datasets": {}, "partitions": {}}
+        cur = next(s for s in m["snapshots"] if s["id"] == m["current"])
+        return {"partitions": {}, **cur}
 
     def _try_publish(self, m: dict, version: int) -> bool:
         """Atomically claim metadata ``version`` with ``m`` — the CAS.
@@ -126,12 +142,66 @@ class SnapshotTable:
         finally:
             os.unlink(tmp)
 
+    def _write(
+        self, datasets: dict[str, tuple[DataFrame, list[str]]]
+    ) -> dict[str, str]:
+        """Write each dataset ONCE, with its directory-partition columns,
+        into a new ``<dataset>/snap-<token>`` dir — uuid-unique, so
+        racing writers never collide on paths. Returns dataset → dir."""
+        token = uuid.uuid4().hex[:8]
+        paths: dict[str, str] = {}
+        for name, (df, part_cols) in datasets.items():
+            paths[name] = os.path.join(self.root, name, f"snap-{token}")
+            w = df.write.mode("overwrite")
+            if part_cols:
+                w = w.partitionBy(*part_cols)
+            w.parquet(paths[name])
+        return paths
+
+    def _publish(self, op: str, build: Callable[[dict, dict], tuple | None]) -> int:
+        """The optimistic commit every snapshot-adding writer goes
+        through. Load the newest metadata ``m``; ``build(m, cur)``
+        returns the new snapshot's ``(datasets, meta, partitions)`` —
+        or None when the write is already applied, which returns the
+        current id — and may raise to reject the current snapshot.
+        The record is stamped with its id, parent and time and
+        CAS-published as the next version. A lost race re-runs
+        ``build`` against the winner's metadata (data files are never
+        rewritten); after ``max_retries`` lost races CommitConflictError
+        leaves the table exactly as the winners published it."""
+        for _ in range(self.max_retries + 1):
+            v, m = self._load()
+            built = build(m, self._current(m))
+            if built is None:
+                return m["current"]
+            datasets, meta, partitions = built
+            sid = (m["current"] or 0) + 1
+            m["snapshots"].append(
+                {
+                    "id": sid,
+                    "datasets": datasets,
+                    "committed_at": time.strftime(
+                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
+                    ),
+                    "parent": m["current"],
+                    "meta": meta,
+                    "partitions": partitions,
+                }
+            )
+            m["current"] = sid
+            if self._try_publish(m, v + 1):
+                return sid
+        raise CommitConflictError(
+            f"{op} on {self.root} lost the metadata race "
+            f"{self.max_retries + 1} times"
+        )
+
     # -- API ----------------------------------------------------------------
     def current_snapshot(self) -> int | None:
-        return self._read_manifest()["current"]
+        return self._load()[1]["current"]
 
     def snapshots(self) -> list[Snapshot]:
-        return [Snapshot(**s) for s in self._read_manifest()["snapshots"]]
+        return [Snapshot(**s) for s in self._load()[1]["snapshots"]]
 
     def commit(self, datasets: dict[str, DataFrame], meta: dict | None = None) -> int:
         """Write all datasets, then atomically publish the new snapshot."""
@@ -154,40 +224,9 @@ class SnapshotTable:
         CommitConflictError after ``max_retries`` lost races, leaving
         the table exactly as the winners published it (this commit's
         data dirs are unreferenced and never visible)."""
-        token = uuid.uuid4().hex[:8]
-        paths: dict[str, str] = {}
-        for name, (df, part_cols) in datasets.items():
-            path = os.path.join(self.root, name, f"snap-{token}")
-            w = df.write.mode("overwrite")
-            if part_cols:
-                w = w.partitionBy(*part_cols)
-            w.parquet(path)
-            paths[name] = path
+        paths = self._write(datasets)
         partitions = {n: list(pc) for n, (_, pc) in datasets.items() if pc}
-
-        for _ in range(self.max_retries + 1):
-            v = self._latest_version()
-            m = self._read_manifest()
-            sid = (m["current"] or 0) + 1
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "datasets": paths,
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                    "parent": m["current"],
-                    "meta": meta or {},
-                    "partitions": partitions,
-                }
-            )
-            m["current"] = sid
-            if self._try_publish(m, v + 1):
-                return sid
-        raise CommitConflictError(
-            f"commit to {self.root} lost the metadata race "
-            f"{self.max_retries + 1} times"
-        )
+        return self._publish("commit", lambda m, cur: (paths, meta or {}, partitions))
 
     def append(self, datasets: dict[str, DataFrame], meta: dict | None = None) -> int:
         """Append-commit (Iceberg *fast append*): write each DataFrame
@@ -201,44 +240,15 @@ class SnapshotTable:
         precisely why Iceberg appends retry without revalidation while
         rewrites (``compact``) must abort on conflict. Datasets not
         named here are carried forward by reference."""
-        token = uuid.uuid4().hex[:8]
-        paths: dict[str, str] = {}
-        for name, df in datasets.items():
-            path = os.path.join(self.root, name, f"snap-{token}")
-            df.write.mode("overwrite").parquet(path)
-            paths[name] = path
+        paths = self._write({n: (df, []) for n, df in datasets.items()})
 
-        for _ in range(self.max_retries + 1):
-            v = self._latest_version()
-            m = self._read_manifest()
-            cur = (
-                next(s for s in m["snapshots"] if s["id"] == m["current"])
-                if m["current"]
-                else {"datasets": {}, "partitions": {}}
-            )
+        def build(m: dict, cur: dict) -> tuple:
             merged: dict[str, str | list[str]] = dict(cur["datasets"])
             for name, path in paths.items():
                 merged[name] = _dirs(merged.get(name, [])) + [path]
-            sid = (m["current"] or 0) + 1
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "datasets": merged,
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                    "parent": m["current"],
-                    "meta": {"operation": "append", **(meta or {})},
-                    "partitions": dict(cur.get("partitions", {})),
-                }
-            )
-            m["current"] = sid
-            if self._try_publish(m, v + 1):
-                return sid
-        raise CommitConflictError(
-            f"append to {self.root} lost the metadata race "
-            f"{self.max_retries + 1} times"
-        )
+            return merged, {"operation": "append", **(meta or {})}, cur["partitions"]
+
+        return self._publish("append", build)
 
     def add_files(
         self,
@@ -260,20 +270,12 @@ class SnapshotTable:
         longer find its PATH referenced and would double-register; its
         KEY (``epoch-<id>``) survives the fold, keeping the sink
         exactly-once through compact/expire cycles."""
-        for _ in range(self.max_retries + 1):
-            v = self._latest_version()
-            m = self._read_manifest()
+
+        def build(m: dict, cur: dict) -> tuple | None:
             applied = m.setdefault("applied_keys", [])
-            if key is not None and f"{dataset}:{key}" in applied:
-                return m["current"]
-            cur = (
-                next(s for s in m["snapshots"] if s["id"] == m["current"])
-                if m["current"]
-                else {"datasets": {}, "partitions": {}}
-            )
             have = _dirs(cur["datasets"].get(dataset, []))
-            if path in have:
-                return m["current"]
+            if path in have or (key is not None and f"{dataset}:{key}" in applied):
+                return None
             if key is not None:
                 applied.append(f"{dataset}:{key}")
                 # bound metadata growth: a retry can only replay the
@@ -282,26 +284,13 @@ class SnapshotTable:
                 # Iceberg's bounded snapshot-summary history
                 if len(applied) > 10_000:
                     m["applied_keys"] = applied[-10_000:]
-            sid = (m["current"] or 0) + 1
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "datasets": {**cur["datasets"], dataset: have + [path]},
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                    "parent": m["current"],
-                    "meta": {"operation": "add_files", "path": path, **(meta or {})},
-                    "partitions": dict(cur.get("partitions", {})),
-                }
+            return (
+                {**cur["datasets"], dataset: have + [path]},
+                {"operation": "add_files", "path": path, **(meta or {})},
+                cur["partitions"],
             )
-            m["current"] = sid
-            if self._try_publish(m, v + 1):
-                return sid
-        raise CommitConflictError(
-            f"add_files to {self.root} lost the metadata race "
-            f"{self.max_retries + 1} times"
-        )
+
+        return self._publish("add_files", build)
 
     def applied(self, dataset: str, key: str) -> bool:
         """Has an application key already been committed for a dataset?
@@ -309,7 +298,7 @@ class SnapshotTable:
         re-run at all (e.g. incremental dedup, where re-deduping an
         epoch against an index that already contains it would corrupt
         the pair set): a retried epoch checks this FIRST and skips."""
-        return f"{dataset}:{key}" in self._read_manifest().get("applied_keys", [])
+        return f"{dataset}:{key}" in self._load()[1].get("applied_keys", [])
 
     def dataset_dirs(
         self, dataset: str, snapshot_id: int | None = None
@@ -343,53 +332,29 @@ class SnapshotTable:
         check covers the whole read-merge-write span, not just the
         write-publish gap (a racer landing between scan and write must
         conflict too, or its rows silently vanish)."""
-        token = uuid.uuid4().hex[:8]
-        path = os.path.join(self.root, dataset, f"snap-{token}")
-        df.write.mode("overwrite").parquet(path)
-        if expected_dirs is not None:
-            base_dirs = list(expected_dirs)
-        else:
-            base = self._read_manifest()
-            base_cur = (
-                next(s for s in base["snapshots"] if s["id"] == base["current"])
-                if base["current"]
-                else {"datasets": {}}
-            )
-            base_dirs = _dirs(base_cur["datasets"].get(dataset, []))
-        for _ in range(self.max_retries + 1):
-            v = self._latest_version()
-            m = self._read_manifest()
-            cur = (
-                next(s for s in m["snapshots"] if s["id"] == m["current"])
-                if m["current"]
-                else {"datasets": {}, "partitions": {}}
-            )
-            if _dirs(cur["datasets"].get(dataset, [])) != base_dirs:
+        path = self._write({dataset: (df, [])})[dataset]
+
+        def dirs(cur: dict) -> list[str]:
+            return _dirs(cur["datasets"].get(dataset, []))
+
+        if expected_dirs is None:
+            expected_dirs = dirs(self._current(self._load()[1]))
+        base_dirs = list(expected_dirs)
+
+        def build(m: dict, cur: dict) -> tuple:
+            if dirs(cur) != base_dirs:
                 raise CommitConflictError(
                     f"concurrent writer changed dataset {dataset!r} under "
                     "this merge — re-read and re-merge (serializable "
                     "isolation: rebasing would drop their rows)"
                 )
-            sid = (m["current"] or 0) + 1
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "datasets": {**cur["datasets"], dataset: path},
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                    "parent": m["current"],
-                    "meta": {"operation": "replace_dataset", **(meta or {})},
-                    "partitions": dict(cur.get("partitions", {})),
-                }
+            return (
+                {**cur["datasets"], dataset: path},
+                {"operation": "replace_dataset", **(meta or {})},
+                cur["partitions"],
             )
-            m["current"] = sid
-            if self._try_publish(m, v + 1):
-                return sid
-        raise CommitConflictError(
-            f"replace_dataset on {self.root} lost the metadata race "
-            f"{self.max_retries + 1} times"
-        )
+
+        return self._publish("replace_dataset", build)
 
     def add_files_many(
         self,
@@ -405,19 +370,11 @@ class SnapshotTable:
         double idempotency as ``add_files``: by path, and by ``key``
         recorded per dataset (all-or-nothing, since the publish is one
         CAS)."""
-        for _ in range(self.max_retries + 1):
-            v = self._latest_version()
-            m = self._read_manifest()
+
+        def build(m: dict, cur: dict) -> tuple | None:
             applied = m.setdefault("applied_keys", [])
-            if key is not None and all(
-                f"{ds}:{key}" in applied for ds in paths
-            ):
-                return m["current"]
-            cur = (
-                next(s for s in m["snapshots"] if s["id"] == m["current"])
-                if m["current"]
-                else {"datasets": {}, "partitions": {}}
-            )
+            if key is not None and all(f"{ds}:{key}" in applied for ds in paths):
+                return None
             merged: dict[str, str | list[str]] = dict(cur["datasets"])
             changed = False
             for ds, path in paths.items():
@@ -429,33 +386,16 @@ class SnapshotTable:
                     applied.append(f"{ds}:{key}")
                     changed = True
             if not changed:
-                return m["current"]
+                return None
             if len(applied) > 10_000:
                 m["applied_keys"] = applied[-10_000:]
-            sid = (m["current"] or 0) + 1
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "datasets": merged,
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                    "parent": m["current"],
-                    "meta": {
-                        "operation": "add_files",
-                        "paths": dict(paths),
-                        **(meta or {}),
-                    },
-                    "partitions": dict(cur.get("partitions", {})),
-                }
+            return (
+                merged,
+                {"operation": "add_files", "paths": dict(paths), **(meta or {})},
+                cur["partitions"],
             )
-            m["current"] = sid
-            if self._try_publish(m, v + 1):
-                return sid
-        raise CommitConflictError(
-            f"add_files_many to {self.root} lost the metadata race "
-            f"{self.max_retries + 1} times"
-        )
+
+        return self._publish("add_files_many", build)
 
     # -- maintenance (Iceberg table-maintenance equivalents) -----------------
     def compact(
@@ -507,56 +447,35 @@ class SnapshotTable:
             raise ValueError(f"snapshot {base['id']} has no dataset {dataset!r}")
         src = base["datasets"][dataset]
         part_cols = base.get("partitions", {}).get(dataset, [])
-        dst = os.path.join(self.root, dataset, f"snap-{uuid.uuid4().hex[:8]}")
         df = spark.read.parquet(*_dirs(src))
         if sort_by:
             df = df.repartitionByRange(max(1, target_files), *sort_by)
             df = df.sortWithinPartitions(*sort_by)
         else:
             df = df.coalesce(max(1, target_files))
-        w = df.write
-        if part_cols:
-            w = w.partitionBy(*part_cols)
-        w.mode("overwrite").parquet(dst)
+        dst = self._write({dataset: (df, part_cols)})[dataset]
 
-        for _ in range(self.max_retries + 1):
-            v = self._latest_version()
-            m = self._read_manifest()
-            cur = next(s for s in m["snapshots"] if s["id"] == m["current"])
+        def build(m: dict, cur: dict) -> tuple:
             if cur["datasets"].get(dataset) != src:
-                shutil.rmtree(dst, ignore_errors=True)
                 raise CommitConflictError(
                     f"compact of {dataset!r} in {self.root}: dataset was "
                     f"replaced concurrently (expected {src}); retry against "
                     "the new snapshot"
                 )
-            sid = m["current"] + 1
-            m["snapshots"].append(
-                {
-                    "id": sid,
-                    "datasets": {**cur["datasets"], dataset: dst},
-                    "committed_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                    "parent": m["current"],
-                    "meta": {
-                        "operation": "compact",
-                        "dataset": dataset,
-                        "source": src,
-                        "target_files": target_files,
-                        "sort_by": list(sort_by or []),
-                    },
-                    "partitions": dict(cur.get("partitions", {})),
-                }
-            )
-            m["current"] = sid
-            if self._try_publish(m, v + 1):
-                return sid
-        shutil.rmtree(dst, ignore_errors=True)
-        raise CommitConflictError(
-            f"compact of {dataset!r} in {self.root} lost the metadata race "
-            f"{self.max_retries + 1} times"
-        )
+            meta = {
+                "operation": "compact",
+                "dataset": dataset,
+                "source": src,
+                "target_files": target_files,
+                "sort_by": list(sort_by or []),
+            }
+            return {**cur["datasets"], dataset: dst}, meta, cur["partitions"]
+
+        try:
+            return self._publish("compact", build)
+        except CommitConflictError:
+            shutil.rmtree(dst, ignore_errors=True)
+            raise
 
     def expire_snapshots(self, keep_last: int = 1) -> list[int]:
         """Drop all but the last ``keep_last`` snapshots from table
@@ -572,28 +491,14 @@ class SnapshotTable:
         time travel past the expiry horizon. Returns expired ids."""
         keep_last = max(1, keep_last)
         for _ in range(self.max_retries + 1):
-            v = self._latest_version()
-            m = self._read_manifest()
+            v, m = self._load()
             if len(m["snapshots"]) <= keep_last:
                 return []
             retained = m["snapshots"][-keep_last:]
             expired = m["snapshots"][:-keep_last]
             m["snapshots"] = retained
             if self._try_publish(m, v + 1):
-                keep = {
-                    p
-                    for s in retained
-                    for v_ in s["datasets"].values()
-                    for p in _dirs(v_)
-                }
-                doomed = {
-                    p
-                    for s in expired
-                    for v_ in s["datasets"].values()
-                    for p in _dirs(v_)
-                    if p not in keep
-                }
-                for p in doomed:
+                for p in _referenced(expired) - _referenced(retained):
                     shutil.rmtree(p, ignore_errors=True)
                 return [s["id"] for s in expired]
         raise CommitConflictError(
@@ -610,13 +515,7 @@ class SnapshotTable:
         writer's dirs are unreferenced until its publish, so only dirs
         older than ``older_than_sec`` are touched. Returns removed
         paths."""
-        m = self._read_manifest()
-        referenced = {
-            p
-            for s in m["snapshots"]
-            for v in s["datasets"].values()
-            for p in _dirs(v)
-        }
+        referenced = _referenced(self._load()[1]["snapshots"])
         now = time.time()
         removed: list[str] = []
         for name in os.listdir(self.root):
@@ -683,7 +582,7 @@ class SnapshotTable:
         }
 
     def _resolve(self, snapshot_id: int | None) -> dict:
-        m = self._read_manifest()
+        m = self._load()[1]
         sid = snapshot_id if snapshot_id is not None else m["current"]
         if sid is None:
             raise ValueError(f"table {self.root} has no snapshot")

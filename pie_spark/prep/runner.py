@@ -133,11 +133,12 @@ def _stage(
         if sid is not None:
             resumed.append(stage)
             return ckpt.scan(spark, stage, snapshot_id=sid)
-    df = compute()
-    ckpt.commit({stage: df}, meta={"stage": stage, "run_id": run_id, "params": params})
-    sid = ckpt.current_snapshot()
+    sid = ckpt.commit(
+        {stage: compute()}, meta={"stage": stage, "run_id": run_id, "params": params}
+    )
     # read back the committed parquet so downstream stages consume the
-    # pinned snapshot (identical plan on fresh and resumed runs)
+    # pinned snapshot (identical plan on fresh and resumed runs); the id
+    # is this commit's own, not whatever another writer made current since
     return ckpt.scan(spark, stage, snapshot_id=sid)
 
 
@@ -193,10 +194,9 @@ def run_prep_checkpointed(
 
     manifest_sid = None
     if ckpt is not None:
-        ckpt.commit(
+        manifest_sid = ckpt.commit(
             {"manifest": manifest},
             meta={"stage": "manifest", "run_id": run_id, "params": params},
         )
-        manifest_sid = ckpt.current_snapshot()
         manifest = ckpt.scan(spark, "manifest", snapshot_id=manifest_sid)
     return PrepOutput(manifest, run_id, manifest_sid, resumed)

@@ -8,7 +8,9 @@ method 1:1)."""
 from __future__ import annotations
 
 import glob
+import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -167,6 +169,7 @@ def test_add_files_idempotent_by_path_and_key(spark, tmp_path):
 
     s1 = t.add_files("d", ext, key="epoch-1")
     assert t.add_files("d", ext, key="epoch-1") == s1  # path + key no-op
+    assert t.add_files("d", ext) == s1  # path no-op
     assert _rows(t.scan(spark, "d")) == {(i,) for i in range(50)}
 
     t.compact(spark, "d", target_files=1)  # folds ext out of the list
@@ -175,6 +178,85 @@ def test_add_files_idempotent_by_path_and_key(spark, tmp_path):
     # applied key survives → still a no-op, no duplicate rows
     assert t.add_files("d", ext, key="epoch-1") == cur
     assert _rows(t.scan(spark, "d")) == {(i,) for i in range(50)}
+
+    # add_files_many: the same two idempotencies, over several datasets
+    # published in one snapshot
+    ext2, ext3 = str(tmp_path / "batch-000002"), str(tmp_path / "batch-000003")
+    spark.range(50, 60).toDF("id").write.parquet(ext2)
+    spark.range(7).toDF("id").write.parquet(ext3)
+    many = {"d": ext2, "e": ext3}
+    s2 = t.add_files_many(many, key="epoch-2")
+    assert s2 == cur + 1
+    assert t.add_files_many(many, key="epoch-2") == s2  # key no-op
+    assert t.add_files_many(many) == s2  # path no-op
+    assert _rows(t.scan(spark, "d")) == {(i,) for i in range(60)}
+    assert _rows(t.scan(spark, "e")) == {(i,) for i in range(7)}
+
+    t.compact(spark, "d", target_files=1)  # folds ext2 out of the list
+    cur = t.current_snapshot()
+    assert t.add_files_many(many, key="epoch-2") == cur
+    assert _rows(t.scan(spark, "d")) == {(i,) for i in range(60)}
+    assert _rows(t.scan(spark, "e")) == {(i,) for i in range(7)}
+
+
+def test_writer_snapshot_records(spark, tmp_path):
+    """Pins the metadata JSON each writer publishes: one new version per
+    write, the record keys, the ``operation`` tag, the parent link, and
+    the datasets/partitions carried forward from the parent."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    ext1, ext2, ext3 = (str(tmp_path / f"batch-{i}") for i in (1, 2, 3))
+    for p in (ext1, ext2, ext3):
+        spark.range(4).toDF("id").write.parquet(p)
+    pdf = spark.range(6).select("id", (F.col("id") % 2).alias("b"))
+    t.commit_partitioned(
+        {"d": (spark.range(3).toDF("id"), []), "p": (pdf, ["b"])}, meta={"k": 1}
+    )
+    t.append({"d": spark.range(3, 5).toDF("id")}, meta={"a": 1})
+    t.add_files("d", ext1, meta={"e": 1}, key="k1")
+    t.add_files_many({"d": ext2, "q": ext3}, meta={"e": 2}, key="k2")
+    t.replace_dataset("d", spark.range(2).toDF("id"), meta={"r": 1})
+    t.compact(spark, "p", target_files=1)
+
+    versions = sorted(glob.glob(os.path.join(t.root, "_meta-*.json")))
+    assert [os.path.basename(v) for v in versions] == [
+        f"_meta-{i:06d}.json" for i in range(1, 7)
+    ]
+    with open(versions[-1]) as f:
+        m = json.load(f)
+    assert list(m) == ["current", "snapshots", "applied_keys"]
+    assert m["current"] == 6 and m["applied_keys"] == ["d:k1", "d:k2", "q:k2"]
+    recs = m["snapshots"]
+    assert [r["id"] for r in recs] == [1, 2, 3, 4, 5, 6]
+    assert [r["parent"] for r in recs] == [None, 1, 2, 3, 4, 5]
+    for r in recs:
+        assert list(r) == [
+            "id", "datasets", "committed_at", "parent", "meta", "partitions"
+        ]
+        assert re.fullmatch(r"\d{4}-\d\d-\d\dT\d\d:\d\d:\d\dZ", r["committed_at"])
+        assert r["partitions"] == {"p": ["b"]}
+
+    c, a, f1, fm, rd, cp = recs
+    d0, p0 = c["datasets"]["d"], c["datasets"]["p"]
+    assert c["meta"] == {"k": 1}
+    assert isinstance(d0, str) and isinstance(p0, str) and set(c["datasets"]) == {"d", "p"}
+    d1 = a["datasets"]["d"][1]
+    assert a["meta"] == {"operation": "append", "a": 1}
+    assert a["datasets"] == {"d": [d0, d1], "p": p0}
+    assert f1["meta"] == {"operation": "add_files", "path": ext1, "e": 1}
+    assert f1["datasets"] == {"d": [d0, d1, ext1], "p": p0}
+    assert fm["meta"] == {
+        "operation": "add_files", "paths": {"d": ext2, "q": ext3}, "e": 2
+    }
+    assert fm["datasets"] == {"d": [d0, d1, ext1, ext2], "p": p0, "q": [ext3]}
+    d2 = rd["datasets"]["d"]
+    assert rd["meta"] == {"operation": "replace_dataset", "r": 1}
+    assert isinstance(d2, str) and rd["datasets"] == {"d": d2, "p": p0, "q": [ext3]}
+    p1 = cp["datasets"]["p"]
+    assert cp["meta"] == {
+        "operation": "compact", "dataset": "p", "source": p0,
+        "target_files": 1, "sort_by": [],
+    }
+    assert p1 != p0 and cp["datasets"] == {"d": d2, "p": p1, "q": [ext3]}
 
 
 def test_compact_sort_by_clusters_key_ranges(spark, tmp_path):

@@ -3,6 +3,7 @@ triples), lineage rows per partition (FIXTURES.md §5; BASELINE.md)."""
 
 import json
 import os
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +14,11 @@ from pie_spark.io.snapshots import SnapshotTable, resume_delta
 from pie_spark.runner import run_checkpointed
 
 from .conftest import SF_DIR
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
+
+from prep_drill import _n_snapshots  # noqa: E402
 
 
 def _hash(df):
@@ -264,6 +270,49 @@ def test_prep_resume_ignores_changed_input(spark, tmp_path):
     assert r4.resumed_stages == ["scores", "drop", "contam"]
 
 
+def test_prep_stages_read_their_own_snapshots(spark, tmp_path, monkeypatch):
+    """Another writer committing to the checkpoint right after a stage's
+    commit must not change what the stage reads back: each stage and the
+    manifest scan the snapshot their own commit returned, so the manifest
+    still equals the single-shot run's."""
+    from pie_spark.prep.runner import PrepConfig, run_prep_checkpointed
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    bench = docs.filter(F.col("doc_id") % 20 == 0)
+    corpus = docs.filter(F.col("doc_id") % 20 != 0).limit(200).localCheckpoint(eager=True)
+    want = _manifest_hash(run_prep_checkpointed(spark, corpus, bench, PrepConfig()).manifest)
+    assert want is not None
+
+    real = SnapshotTable.commit
+
+    def commit_then_race(self, datasets, meta=None):
+        sid = real(self, datasets, meta)
+        # the competitor's snapshot holds the same datasets, emptied
+        real(
+            SnapshotTable(self.root),
+            {n: df.limit(0) for n, df in datasets.items()},
+            {"who": "competitor"},
+        )
+        return sid
+
+    monkeypatch.setattr(SnapshotTable, "commit", commit_then_race)
+    ckpt_dir = str(tmp_path / "ck")
+    r = run_prep_checkpointed(spark, corpus, bench, PrepConfig(checkpoint_dir=ckpt_dir))
+    assert r.resumed_stages == []
+    assert _manifest_hash(r.manifest) == want
+    assert SnapshotTable(ckpt_dir).meta(r.manifest_snapshot).get("stage") == "manifest"
+
+
+def test_prep_drill_counts_committed_snapshots(spark, tmp_path):
+    """The kill drill sends SIGKILL once two stage snapshots are
+    committed; its count must read the table's current metadata."""
+    ck = str(tmp_path / "ck")
+    t = SnapshotTable(ck)
+    t.commit({"d": spark.range(3)})
+    t.commit({"d": spark.range(4)})
+    assert _n_snapshots(ck) == 2
+
+
 # ---------------------------------------------------------------------------
 # concurrent-writer commit race (VERDICT r05 next#5): the optimistic
 # metadata CAS must serialize racing commits like Iceberg's
@@ -344,14 +393,34 @@ def test_commit_conflict_rebases_and_retries(spark, tmp_path):
     assert t.scan(spark, "d", 3).count() == 11
 
 
-def test_commit_conflict_exhausted_fails_atomically(spark, tmp_path):
-    """With retries exhausted the loser must fail cleanly: the table
-    stays exactly as the winners published it, and the failed commit's
-    data files are unreferenced — never visible to any scan."""
+@pytest.mark.parametrize(
+    "writer",
+    ["commit", "append", "add_files", "add_files_many", "replace_dataset", "compact"],
+)
+def test_commit_conflict_exhausted_fails_atomically(spark, tmp_path, writer):
+    """With retries exhausted the loser must fail cleanly, whichever
+    writer it is: the table stays exactly as the winners published it,
+    the failed write's data files are unreferenced — never visible to
+    any scan — its idempotency key is not recorded, and a lost
+    compaction removes its rewrite dir."""
     from pie_spark.io.snapshots import CommitConflictError
 
     t = SnapshotTable(str(tmp_path / "t"), max_retries=0)
     t.commit({"d": spark.range(3)})
+    ext = str(tmp_path / "batch-000001")
+    spark.range(99).write.parquet(ext)
+    loser = {
+        "commit": lambda: t.commit({"d": spark.range(99)}, meta={"who": "loser"}),
+        "append": lambda: t.append({"d": spark.range(99)}, meta={"who": "loser"}),
+        "add_files": lambda: t.add_files("d", ext, meta={"who": "loser"}, key="k"),
+        "add_files_many": lambda: t.add_files_many(
+            {"d": ext}, meta={"who": "loser"}, key="k"
+        ),
+        "replace_dataset": lambda: t.replace_dataset(
+            "d", spark.range(99), meta={"who": "loser"}
+        ),
+        "compact": lambda: t.compact(spark, "d", target_files=1),
+    }[writer]
 
     def always_beaten(m, version):
         # a fresh competitor (unpatched) claims every version first
@@ -360,13 +429,17 @@ def test_commit_conflict_exhausted_fails_atomically(spark, tmp_path):
 
     t._try_publish = always_beaten  # instance-only patch
     with pytest.raises(CommitConflictError):
-        t.commit({"d": spark.range(99)}, meta={"who": "loser"})
+        loser()
     del t._try_publish
 
     # winner's state intact; loser invisible
+    assert [s.id for s in t.snapshots()] == [1, 2]
     assert t.current_snapshot() == 2
     assert t.scan(spark, "d").count() == 5
     assert all(s.meta.get("who") != "loser" for s in t.snapshots())
+    assert not t.applied("d", "k")
+    if writer == "compact":
+        assert t.remove_orphans(older_than_sec=0.0) == []
 
 
 @pytest.mark.slow
